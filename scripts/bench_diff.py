@@ -9,11 +9,12 @@ to bench_queries.json; each round commits a stamped copy
 table the driver's PERF comparison cannot.
 
 Usage: scripts/bench_diff.py PREV.json NOW.json [--threshold 1.10]
-Exit code 0 always (reporting tool, not a gate).
+(`--threshold=1.10` works too.) Exit code 0 after any report (a
+reporting tool, not a gate); 2 on bad usage.
 """
+import argparse
 import json
 import math
-import sys
 
 
 def load(path):
@@ -23,16 +24,15 @@ def load(path):
 
 
 def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    thr = 1.10
-    for a in sys.argv[1:]:
-        if a.startswith("--threshold"):
-            thr = float(a.split("=", 1)[1]) if "=" in a else thr
-    if len(args) != 2:
-        print(__doc__)
-        return
-    prev, pmeta = load(args[0])
-    now, nmeta = load(args[1])
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawTextHelpFormatter)
+    ap.add_argument("prev")
+    ap.add_argument("now")
+    ap.add_argument("--threshold", type=float, default=1.10)
+    args = ap.parse_args()
+    thr = args.threshold
+    prev, pmeta = load(args.prev)
+    now, nmeta = load(args.now)
     common = sorted(set(prev) & set(now))
     dropped = sorted(set(prev) - set(now))
     added = sorted(set(now) - set(prev))

@@ -64,6 +64,13 @@ def main():
         bq = json.load(f)
     spark = {k: v["sec"] for k, v in bq["queries"].items()}
     passes = {k: v["passes"] for k, v in bq["queries"].items()}
+    # a failed query reads sec -1; summing it would shrink spark_total
+    failed = [q for q in TPCH if spark.get(q, -1) < 0]
+    if failed:
+        for q in failed:
+            err = bq["queries"].get(q, {}).get("error", "no result")
+            print(f"FAILED {q}: {err}", file=sys.stderr)
+        sys.exit(f"{len(failed)} TPC-H queries failed: {', '.join(failed)}")
 
     import duckdb
     with open(f"{odir}/oracle_sql.json") as f:

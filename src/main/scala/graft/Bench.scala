@@ -82,18 +82,22 @@ object Bench {
     // split never shrinks the total — but meaningful build cost
     // surfaces in "setup_sec" so a round-trip that pays writer cost is
     // never compared 1:1 against a plain-SELECT oracle baseline.
-    def runPass(): Seq[(String, Double, Double)] = suite.map { case (name, fn) =>
+    // a failure's reason, for the sidecar's per-query "error" field
+    def reason(e: Throwable): String = s"${e.getClass.getName}: " +
+      String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("").take(300)
+    def runPass(): Seq[(String, Double, Double, Option[String])] = suite.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val built =
-        try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
+        try Right(fn(spark, sfDir)) catch { case e: Throwable => Left(reason(e)) }
       val t1 = System.nanoTime()
-      val ok = built.exists { df =>
-        try { df.write.format("noop").mode("overwrite").save(); true }
-        catch { case _: Throwable => false }
-      }
+      val error = built.flatMap { df =>
+        try Right(df.write.format("noop").mode("overwrite").save())
+        catch { case e: Throwable => Left(reason(e)) }
+      }.left.toOption
       val t2 = System.nanoTime()
+      val ok = error.isEmpty
       (name, if (ok) (t2 - t0) / 1e9 else -1.0,
-        if (ok) (t1 - t0) / 1e9 else -1.0)
+        if (ok) (t1 - t0) / 1e9 else -1.0, error)
     }
 
     // Drain BroadcastGate's pass-path pins between (and after) passes:
@@ -149,7 +153,7 @@ object Bench {
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(20)
       .map { case (k, v) => s""""$k":${num3(v)}""" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","passes":$passes,"pass_totals_run_sec":$passTotals,"n_queries":${results.size},"failed_count":${failedNames.size},"failed_sample":${capList(failedNames, 10)},"variance_flag_count":${varianceFlags.size},"variance_flags_sample":${capList(varianceFlags, 8)},"slowest20_min_run_sec":$slowest,"per_query_file":"bench_queries.json (sec=min run incl build; passes/build = per-pass run/build sec)"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","passes":$passes,"pass_totals_run_sec":$passTotals,"n_queries":${results.size},"failed_count":${failedNames.size},"failed_sample":${capList(failedNames, 10)},"variance_flag_count":${varianceFlags.size},"variance_flags_sample":${capList(varianceFlags, 8)},"slowest20_min_run_sec":$slowest,"per_query_file":"bench_queries.json (sec=min run incl build; passes/build = per-pass run/build sec; error = first failure reason)"}""")
     // Stable sidecar: the full per-query dict as a FILE, because the
     // driver's stdout tail-truncation destroys the per-query timings in
     // BENCH_r*.json every round and makes round-over-round regression
@@ -164,7 +168,12 @@ object Bench {
       val ts = allPasses.map(p => num(p(i)._2)).mkString("[", ",", "]")
       val bs = allPasses.map(p => num(p(i)._3)).mkString("[", ",", "]")
       val minV = results(i)._2
-      s""""$name":{"sec":$minV,"passes":$ts,"build":$bs}"""
+      val err = allPasses.flatMap(_(i)._4).headOption.fold("") { e =>
+        val quoted = com.fasterxml.jackson.core.io.JsonStringEncoder
+          .getInstance().quoteAsString(e)
+        s""","error":"${new String(quoted)}""""
+      }
+      s""""$name":{"sec":$minV,"passes":$ts,"build":$bs$err}"""
     }.mkString("{", ",", "}")
     val sidecar =
       s"""{"sf":"$sfDir","total":$total,"pass_totals":$passTotals,"queries":$perQuery}\n"""

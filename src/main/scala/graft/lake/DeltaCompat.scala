@@ -2,6 +2,7 @@ package graft.lake
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.time.LocalDate
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
@@ -9,7 +10,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession, functions}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Minimal Delta Lake log interop — the reference reads Delta tables and
   * writes them (`/root/reference/CHANGELOG.md:25,27`); this container has
@@ -940,7 +942,7 @@ object DeltaCompat {
       // Footer stats on a pool: never 10⁴ sequential driver opens.
       val added = Manifest.parFiles(stageFiles(staged, root, stagePartCols)) {
         case (rel, size, pv) =>
-          (rel, size, pv, fileStatsJson(root.resolve(rel)))
+          (rel, size, pv, statsJson(FooterStats.read(root.resolve(rel))))
       }
 
       val cdfActive = priorState.map(_.cdfEnabled).getOrElse(
@@ -1256,100 +1258,43 @@ object DeltaCompat {
       })
   }
 
-  /** `add.stats` JSON for one staged parquet file, from its footer only:
+  /** `add.stats` JSON rendering of one file's [[FooterStats]]:
     * numRecords, per-column min/max, per-column nullCount — the pruning
     * signal real Delta readers use for data skipping, and (numRecords)
     * what DV-aware engines answer count(*) from. Stats are keyed by the
     * FILE's column names, which on column-mapped tables are the physical
-    * names — exactly what the protocol wants. Columns whose parquet type
-    * carries a logical annotation we don't map (timestamps, decimals)
-    * and long strings are omitted — stats are per-column optional, and
-    * omitted is always safe where a wrong bound would corrupt pruning.
+    * names — exactly what the protocol wants. Dates spell as ISO calendar
+    * dates (what real writers emit and [[BoundsPruning.jsonBound]]
+    * decodes back to epoch days). Timestamps are omitted: the protocol's
+    * JSON form is millisecond text, and a max cut to millis would
+    * under-bound the file.
     *
     * `tight = Some(false)` marks the bounds as covering rows a deletion
     * vector has since killed (the protocol's tightBounds flag — required
     * false once a DV is attached, since footer min/max still span the
     * deleted rows); absent means the default, true. */
-  private def fileStatsJson(p: Path, tight: Option[Boolean] = None): String = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    Manifest.withFooter(p) { footer =>
-      val blocks = footer.getBlocks.asScala
-      val stats = mapper.createObjectNode()
-      stats.put("numRecords", blocks.map(_.getRowCount).sum)
-      tight.foreach(stats.put("tightBounds", _))
-      val minV = mapper.createObjectNode()
-      val maxV = mapper.createObjectNode()
-      val nullC = mapper.createObjectNode()
-      val byCol = blocks.flatMap(_.getColumns.asScala)
-        .groupBy(_.getPath.toDotString)
-      byCol.foreach { case (name, chunks) =>
-        if (name.indexOf('.') < 0) { // top-level leaves only
-          val nulls = chunks.map(c => Option(c.getStatistics)
-            .map(_.getNumNulls).getOrElse(-1L))
-          if (nulls.forall(_ >= 0)) nullC.put(name, nulls.sum)
-          val sts = chunks.map(_.getStatistics)
-            .filter(s => s != null && s.hasNonNullValue)
-          if (sts.nonEmpty && sts.size == chunks.size) {
-            val pt = chunks.head.getPrimitiveType
-            val logical = pt.getLogicalTypeAnnotation
-            (pt.getPrimitiveTypeName, logical) match {
-              case (INT32, null) =>
-                minV.put(name, sts.map(_.genericGetMin
-                  .asInstanceOf[Integer].intValue).min)
-                maxV.put(name, sts.map(_.genericGetMax
-                  .asInstanceOf[Integer].intValue).max)
-              // dates: parquet stores epoch-day int32; Delta stats JSON
-              // spells them as ISO calendar dates (what real writers
-              // emit and jsonBound decodes back to epoch days)
-              case (INT32, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
-                val mn = sts.map(_.genericGetMin
-                  .asInstanceOf[Integer].intValue).min
-                val mx = sts.map(_.genericGetMax
-                  .asInstanceOf[Integer].intValue).max
-                minV.put(name,
-                  java.time.LocalDate.ofEpochDay(mn.toLong).toString)
-                maxV.put(name,
-                  java.time.LocalDate.ofEpochDay(mx.toLong).toString)
-              case (INT64, null) =>
-                minV.put(name, sts.map(_.genericGetMin
-                  .asInstanceOf[java.lang.Long].longValue).min)
-                maxV.put(name, sts.map(_.genericGetMax
-                  .asInstanceOf[java.lang.Long].longValue).max)
-              case (FLOAT, null) =>
-                minV.put(name, sts.map(_.genericGetMin
-                  .asInstanceOf[java.lang.Float].floatValue).min)
-                maxV.put(name, sts.map(_.genericGetMax
-                  .asInstanceOf[java.lang.Float].floatValue).max)
-              case (DOUBLE, null) =>
-                minV.put(name, sts.map(_.genericGetMin
-                  .asInstanceOf[java.lang.Double].doubleValue).min)
-                maxV.put(name, sts.map(_.genericGetMax
-                  .asInstanceOf[java.lang.Double].doubleValue).max)
-              case (BOOLEAN, null) =>
-                minV.put(name, sts.map(_.genericGetMin
-                  .asInstanceOf[java.lang.Boolean].booleanValue).min)
-                maxV.put(name, sts.map(_.genericGetMax
-                  .asInstanceOf[java.lang.Boolean].booleanValue).max)
-              case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-                val mins = sts.map(_.minAsString)
-                val maxs = sts.map(_.maxAsString)
-                // long strings omitted rather than truncated: a naive
-                // truncation of max would UNDER-bound it (corrupt skip)
-                if (maxs.map(_.length).max <= 64) {
-                  minV.put(name, mins.min)
-                  maxV.put(name, maxs.max)
-                }
-              case _ => () // unmapped logical types: omit
-            }
-          }
-        }
+  private[lake] def statsJson(s: FooterStats,
+      tight: Option[Boolean] = None): String = {
+    val stats = mapper.createObjectNode()
+    stats.put("numRecords", s.rows)
+    tight.foreach(stats.put("tightBounds", _))
+    val minV = stats.putObject("minValues")
+    val maxV = stats.putObject("maxValues")
+    val nullC = stats.putObject("nullCount")
+    s.columns.foreach { case (name, c) =>
+      c.bounds.foreach {
+        case Bounds(TimestampType | TimestampNTZType, _, _) => ()
+        case Bounds(DateType, lo: Integer, hi: Integer) =>
+          minV.put(name, LocalDate.ofEpochDay(lo.longValue).toString)
+          maxV.put(name, LocalDate.ofEpochDay(hi.longValue).toString)
+        // boxed numbers, booleans and strings serialize as JSON scalars
+        case Bounds(_, lo, hi) =>
+          minV.putPOJO(name, lo)
+          maxV.putPOJO(name, hi)
       }
-      stats.set[com.fasterxml.jackson.databind.JsonNode]("minValues", minV)
-      stats.set[com.fasterxml.jackson.databind.JsonNode]("maxValues", maxV)
-      stats.set[com.fasterxml.jackson.databind.JsonNode]("nullCount", nullC)
-      mapper.writeValueAsString(stats)
+      c.nulls.foreach(nullC.put(name, _))
     }
+    mapper.writeValueAsString(stats)
   }
 
   /** Atomically land one commit's action list as the next JSON log
@@ -1488,7 +1433,7 @@ object DeltaCompat {
       // deletionVector (readers compute the logical row count as
       // numRecords - cardinality), and tightBounds:false because the
       // footer min/max still cover the DV'd rows.
-      a.put("stats", fileStatsJson(Paths.get(absPath(table, rel)),
+      a.put("stats", statsJson(FooterStats.read(Paths.get(absPath(table, rel))),
         tight = Some(false)))
       val dvNode = a.putObject("deletionVector")
       dvNode.put("storageType", d.storageType)
@@ -2238,7 +2183,7 @@ object DeltaCompat {
       // foreign logs written without stats. Sequentially recomputing
       // 10⁴ footers was 70 s of a 10k-file checkpoint (MetaScaleProbe);
       // carrying is O(1) per file and the fallback runs on the pool.
-      val stats = add.stats.getOrElse(fileStatsJson(onDisk,
+      val stats = add.stats.getOrElse(statsJson(FooterStats.read(onDisk),
         tight = if (add.dv.isDefined) Some(false) else None))
       Row(encodePath(path),
         add.partitionValues.map { case (k, v) => k -> v.orNull },

@@ -138,15 +138,10 @@ object IcebergCompat {
         f.transform))
   }
 
-  /** Top-level column names physically present in a parquet file —
-    * footer-only, the shape probe for reconstruction-vs-direct scans. */
-  private def parquetColumns(p: Path): Set[String] =
-    Manifest.withFooter(p)(_.getFileMetaData.getSchema
-      .getFields.asScala.map(_.getName).toSet)
-
   /** Top-level parquet columns with their field-id annotations (the
     * spec's projection handles; absent on files written before the
-    * writer annotated them). Footer-only. */
+    * writer annotated them). Footer-only — also the shape probe for
+    * reconstruction-vs-direct scans. */
   private def parquetFields(p: Path): Seq[(String, Option[Int])] =
     Manifest.withFooter(p)(_.getFileMetaData.getSchema
       .getFields.asScala.map(t =>
@@ -194,7 +189,7 @@ object IcebergCompat {
   /** Decode one spec single-value-binary bound (little-endian numerics,
     * raw UTF-8 strings, 1-byte booleans). Unknown type/width → None —
     * an undecodable bound must never prune. */
-  private def decodeBound(b: Array[Byte], t: DataType): Option[Any] = {
+  private[lake] def decodeBound(b: Array[Byte], t: DataType): Option[Any] = {
     def bb = java.nio.ByteBuffer.wrap(b)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     t match {
@@ -698,7 +693,7 @@ object IcebergCompat {
       if (schemasCount <= 1)
         dataFiles.groupBy(_.specId).toSeq.sortBy(_._1)
           .flatMap { case (specId, fs) =>
-            val present = parquetColumns(Paths.get(fs.head.path))
+            val present = parquetFields(Paths.get(fs.head.path)).map(_._1)
             val fileNameOf = schema.fieldNames.filter(present.contains)
               .map(n => n -> n).toMap
             val missing = schema.fieldNames
@@ -2192,96 +2187,17 @@ object IcebergCompat {
     try rows.foreach(w.append) finally w.close()
   }
 
-  /** Row count from the parquet footer — metadata-only, no data scan
-    * (how real Iceberg collects commit stats). */
-  private def parquetRowCount(p: Path): Long =
-    Manifest.withFooter(p)(_.getBlocks.asScala.map(_.getRowCount).sum)
-
-  /** Per-column (lower, upper) bound bytes from a parquet footer, in
-    * the spec's single-value binary encoding (little-endian numerics,
-    * raw UTF-8 strings, 1-byte booleans). Columns with unmapped logical
-    * types or long strings are omitted — bounds are per-column optional
-    * and a wrong bound corrupts every reader's pruning. */
-  private def parquetBounds(p: Path): Map[String, (Array[Byte], Array[Byte])] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    def le(n: Int)(f: ByteBuffer => Unit): Array[Byte] = {
-      val b = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-      f(b)
-      b.array()
+  /** Per-column (lower, upper) bound bytes of one file's [[FooterStats]],
+    * in the spec's single-value binary encoding ([[encodeBound]]). */
+  private[lake] def boundBytes(
+      s: FooterStats): Map[String, (Array[Byte], Array[Byte])] =
+    s.columns.flatMap { case (name, c) =>
+      for {
+        b <- c.bounds
+        lo <- encodeBound(b.min)
+        hi <- encodeBound(b.max)
+      } yield name -> (lo, hi)
     }
-    Manifest.withFooter(p) { footer =>
-      footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
-        .groupBy(_.getPath.toDotString)
-        .flatMap { case (name, chunks) =>
-          if (name.indexOf('.') >= 0) None
-          else {
-            val sts = chunks.map(_.getStatistics)
-              .filter(s => s != null && s.hasNonNullValue)
-            if (sts.size != chunks.size) None
-            else {
-              val pt = chunks.head.getPrimitiveType
-              (pt.getPrimitiveTypeName, pt.getLogicalTypeAnnotation) match {
-                case (INT32, null) =>
-                  val (lo, hi) = (
-                    sts.map(_.genericGetMin.asInstanceOf[Integer].intValue).min,
-                    sts.map(_.genericGetMax.asInstanceOf[Integer].intValue).max)
-                  Some(name -> (le(4)(_.putInt(lo)), le(4)(_.putInt(hi))))
-                case (INT64, null) =>
-                  val (lo, hi) = (
-                    sts.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
-                    sts.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
-                  Some(name -> (le(8)(_.putLong(lo)), le(8)(_.putLong(hi))))
-                case (FLOAT, null) =>
-                  val (lo, hi) = (
-                    sts.map(_.genericGetMin.asInstanceOf[java.lang.Float].floatValue).min,
-                    sts.map(_.genericGetMax.asInstanceOf[java.lang.Float].floatValue).max)
-                  // NaN-poisoned stats (a writer that folded NaN into
-                  // min/max) must not become spec bounds, which EXCLUDE
-                  // NaN — drop rather than mislead readers
-                  if (lo.isNaN || hi.isNaN) None
-                  else Some(name -> (le(4)(_.putFloat(lo)), le(4)(_.putFloat(hi))))
-                case (DOUBLE, null) =>
-                  val (lo, hi) = (
-                    sts.map(_.genericGetMin.asInstanceOf[java.lang.Double].doubleValue).min,
-                    sts.map(_.genericGetMax.asInstanceOf[java.lang.Double].doubleValue).max)
-                  if (lo.isNaN || hi.isNaN) None
-                  else Some(name -> (le(8)(_.putDouble(lo)), le(8)(_.putDouble(hi))))
-                case (BOOLEAN, null) =>
-                  val lo = sts.map(_.genericGetMin.asInstanceOf[java.lang.Boolean].booleanValue).min
-                  val hi = sts.map(_.genericGetMax.asInstanceOf[java.lang.Boolean].booleanValue).max
-                  Some(name -> (Array[Byte](if (lo) 1 else 0),
-                    Array[Byte](if (hi) 1 else 0)))
-                // date: epoch-day int32, same 4-byte LE encoding the
-                // spec's date single-value serialization uses
-                case (INT32, _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
-                  val (lo, hi) = (
-                    sts.map(_.genericGetMin.asInstanceOf[Integer].intValue).min,
-                    sts.map(_.genericGetMax.asInstanceOf[Integer].intValue).max)
-                  Some(name -> (le(4)(_.putInt(lo)), le(4)(_.putInt(hi))))
-                // timestamp(tz): micros-unit int64 only — a millis-unit
-                // foreign file's values are NOT spec micros; skip them
-                case (INT64, ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation)
-                    if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS =>
-                  val (lo, hi) = (
-                    sts.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
-                    sts.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
-                  Some(name -> (le(8)(_.putLong(lo)), le(8)(_.putLong(hi))))
-                case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-                  val mins = sts.map(_.minAsString)
-                  val maxs = sts.map(_.maxAsString)
-                  if (maxs.map(_.length).max > 64) None
-                  else Some(name -> (
-                    mins.min.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                    maxs.max.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-                case _ => None
-              }
-            }
-          }
-        }.toMap
-    }
-  }
 
   /** Carry a prior manifest-list entry (data or delete) into a new
     * list; entries written by a pre-upgrade layout get their length
@@ -2535,7 +2451,7 @@ object IcebergCompat {
     val identityFields = partFields.filter(_.transform == "identity")
     val keepIdentityInFiles = identityFields.nonEmpty && prior.exists { m =>
       firstLiveDataFile(m).exists { p =>
-        val cols = parquetColumns(Paths.get(p))
+        val cols = parquetFields(Paths.get(p)).map(_._1)
         identityFields.forall(f => cols.contains(f.source))
       }
     }
@@ -2621,18 +2537,17 @@ object IcebergCompat {
     // schema field ids (from the table's current schema — NOT positional
     // after evolution) for the per-column bound maps
     val fieldIdByName = idByName
-    def boundsArray(fieldName: String,
-        pick: ((Array[Byte], Array[Byte])) => Array[Byte],
-        bounds: Map[String, (Array[Byte], Array[Byte])]): AnyRef = {
+    // a data_file `map<int, _>` field: (field id → value) records,
+    // id-ordered, for the columns the table schema knows
+    def idMap(fieldName: String, values: Map[String, AnyRef]): AnyRef = {
       val arrSchema = dataFileSchema.getField(fieldName).schema().getTypes.get(1)
-      val kvSchema = arrSchema.getElementType
-      val entries = bounds.toSeq
-        .flatMap { case (col, b) => fieldIdByName.get(col).map(id => (id, pick(b))) }
+      val entries = values.toSeq
+        .flatMap { case (col, v) => fieldIdByName.get(col).map(id => (id, v)) }
         .sortBy(_._1)
-        .map { case (id, bytes) =>
-          val r = new GenericData.Record(kvSchema)
+        .map { case (id, v) =>
+          val r = new GenericData.Record(arrSchema.getElementType)
           r.put("key", id)
-          r.put("value", java.nio.ByteBuffer.wrap(bytes))
+          r.put("value", v)
           r: AnyRef
         }
       new GenericData.Array[AnyRef](arrSchema, entries.asJava)
@@ -2641,11 +2556,11 @@ object IcebergCompat {
     // footer opens on one driver thread (MetaScaleProbe finding)
     val fileStats = Manifest.parFiles(moved.map(_._1)) { p =>
       val path = Paths.get(p)
-      (parquetRowCount(path), parquetBounds(path), Files.size(path))
+      (FooterStats.read(path), Files.size(path))
     }
     val entriesWithRows = moved.zip(fileStats).map {
-      case ((p, tuple), (rows, bounds, fsize)) =>
-      val path = Paths.get(p)
+      case ((p, tuple), (stats, fsize)) =>
+      val bounds = boundBytes(stats)
       val d = new GenericData.Record(dataFileSchema)
       d.put("content", 0) // DATA
       d.put("file_path", p)
@@ -2653,39 +2568,30 @@ object IcebergCompat {
       val pr = new GenericData.Record(partStructSchema)
       partFields.map(_.name).zip(tuple).foreach { case (c, v) => pr.put(c, v) }
       d.put("partition", pr)
-      d.put("record_count", rows)
+      d.put("record_count", stats.rows)
       d.put("file_size_in_bytes", fsize)
-      d.put("lower_bounds", boundsArray("lower_bounds", _._1, bounds))
-      d.put("upper_bounds", boundsArray("upper_bounds", _._2, bounds))
+      def side(pick: ((Array[Byte], Array[Byte])) => Array[Byte]) =
+        bounds.map { case (c, b) => c -> java.nio.ByteBuffer.wrap(pick(b)) }
+      d.put("lower_bounds", idMap("lower_bounds", side(_._1)))
+      d.put("upper_bounds", idMap("upper_bounds", side(_._2)))
       // Per spec, float/double bounds EXCLUDE NaN, so readers (ours at
       // read():fpSafe, real engines alike) may only prune on them when
-      // the file provably holds no NaN. parquet-mr drops fp footer
-      // stats once a NaN is folded in (and parquetBounds re-checks), so
-      // a surviving fp bound proves NaN-absence → count 0.
-      val nanZero = bounds.keys.filter(c =>
-        df.schema.fields.exists(f => f.name == c &&
-          (f.dataType == FloatType || f.dataType == DoubleType))).toSeq
-      if (nanZero.nonEmpty) {
-        val arrSchema = dataFileSchema.getField("nan_value_counts")
-          .schema().getTypes.get(1)
-        val kvSchema = arrSchema.getElementType
-        val entries = nanZero.flatMap(c => fieldIdByName.get(c))
-          .sorted.map { id =>
-            val r = new GenericData.Record(kvSchema)
-            r.put("key", id)
-            r.put("value", 0L)
-            r: AnyRef
-          }
-        d.put("nan_value_counts",
-          new GenericData.Array[AnyRef](arrSchema, entries.asJava))
+      // the file provably holds no NaN. A NaN poisons the footer stats
+      // and FooterStats drops poisoned bounds, so a surviving fp bound
+      // proves NaN-absence → count 0.
+      val nanZero = stats.columns.collect {
+        case (c, ColumnStats(_, Some(Bounds(FloatType | DoubleType, _, _)))) =>
+          c -> Long.box(0L)
       }
+      if (nanZero.nonEmpty)
+        d.put("nan_value_counts", idMap("nan_value_counts", nanZero))
       val e = new GenericData.Record(entrySchema)
       e.put("status", 1) // ADDED
       e.put("snapshot_id", snapshotId)
       e.put("sequence_number", sequenceNumber)
       e.put("file_sequence_number", sequenceNumber)
       e.put("data_file", d)
-      (e: GenericRecord, rows)
+      (e: GenericRecord, stats.rows)
     }
     val manifestPath = metaDir.resolve(f"m-$snapshotId%d.avro")
     writeAvro(manifestPath, entrySchema, entriesWithRows.map(_._1),
@@ -3227,7 +3133,7 @@ object IcebergCompat {
       f"$snapshotId%d-delete-${UUID.randomUUID()}.parquet")
     Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
     LakeFs.deleteRec(stage)
-    val nRows = parquetRowCount(target)
+    val nRows = FooterStats.read(target).rows
 
     // Delete manifest: one delete-file entry (content 1 = positional,
     // 2 = equality). Global scope = empty partition struct under the

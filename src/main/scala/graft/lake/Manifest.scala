@@ -45,12 +45,44 @@ case class DataFile(
       hi <- colMax.flatMap(_.get(column))
     } yield (lo, hi)
 
+  /** [[rangeOf]], falling back to `minKey`/`maxKey` when `column` is the
+    * leading pk (manifests older than per-column stats carry only those). */
+  def rangeOf(column: String, pk: Seq[String]): Option[(Long, Long)] =
+    rangeOf(column).orElse(
+      if (pk.headOption.contains(column)) for (a <- minKey; b <- maxKey) yield (a, b)
+      else None)
+
   /** Footer-derived [lo, hi] of a string column, when known. */
   def strRangeOf(column: String): Option[(String, String)] =
     for {
       lo <- colMinStr.flatMap(_.get(column))
       hi <- colMaxStr.flatMap(_.get(column))
     } yield (lo, hi)
+}
+
+object DataFile {
+  import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType}
+
+  /** The mirror's rendering of a file's [[FooterStats]]: integer and date
+    * (epoch-day) bounds as longs, string bounds as text, keyed by dotted
+    * leaf path (a pushed nested-field filter names `s.a`); the leading
+    * pk's integer range as `minKey`/`maxKey`. Other types stay unbounded. */
+  def fromStats(path: String, bytes: Long, leadPk: Option[String],
+      s: FooterStats): DataFile = {
+    def ranges[A](pick: PartialFunction[Bounds, (A, A)]) = s.leaves.flatMap {
+      case (leaf, cs) => cs.bounds.collect(pick).map(leaf.mkString(".") -> _)
+    }
+    val ints = ranges {
+      case Bounds(IntegerType | LongType | DateType, lo: Number, hi: Number) =>
+        (lo.longValue, hi.longValue)
+    }
+    val strs = ranges { case Bounds(StringType, lo: String, hi: String) => (lo, hi) }
+    def side[A](m: Map[String, (A, A)])(pick: ((A, A)) => A) =
+      if (m.isEmpty) None else Some(m.map { case (c, r) => c -> pick(r) })
+    val lead = leadPk.flatMap(ints.get)
+    DataFile(path, s.rows, bytes, lead.map(_._1), lead.map(_._2),
+      side(ints)(_._1), side(ints)(_._2), side(strs)(_._1), side(strs)(_._2))
+  }
 }
 
 /** Versioned table manifest — our stand-in for an Iceberg snapshot
@@ -136,9 +168,9 @@ object Manifest {
     try f(stream.iterator().asScala) finally stream.close()
   }
 
-  /** Run `f` over a parquet file's footer metadata, always closing the
-    * reader — the shared open/close boilerplate behind commit-time file
-    * statistics (Mooncake) and Iceberg record counts.
+  /** Run `f` over an open parquet file reader, always closing it — the
+    * shared open/close boilerplate behind [[FooterStats]] and the bloom
+    * probe.
     *
     * ONE shared Hadoop Configuration: constructing it per call re-reads
     * core-default.xml out of the hadoop jar (a classpath ZIP walk) —
@@ -147,15 +179,19 @@ object Manifest {
     * is thread-safe for reads, so commit paths may also fan footer reads
     * across a pool. */
   private[lake] lazy val footerConf = new org.apache.hadoop.conf.Configuration()
-  private[lake] def withFooter[A](p: Path)(
-      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
+  private[lake] def withReader[A](p: Path)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), footerConf)
-    val reader = ParquetFileReader.open(in)
-    try f(reader.getFooter) finally reader.close()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(p.toUri), footerConf))
+    try f(reader) finally reader.close()
   }
+
+  /** Run `f` over a parquet file's footer metadata (see [[withReader]]). */
+  private[lake] def withFooter[A](p: Path)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A =
+    withReader(p)(r => f(r.getFooter))
 
   /** Map `f` over `items` on a bounded pool — the commit-time pattern
     * for per-file footer work (stats, record counts): a 10⁴-file commit
@@ -180,14 +216,8 @@ object Manifest {
     * unpruned). One footer + bitset read, no data pages touched. */
   private[lake] def bloomMightContain(p: Path, column: String,
       value: Long): Boolean = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri),
-      new org.apache.hadoop.conf.Configuration())
-    val reader = ParquetFileReader.open(in)
-    try {
+    withReader(p) { reader =>
       reader.getFooter.getBlocks.asScala.exists { b =>
         b.getColumns.asScala.find(_.getPath.toDotString == column)
           .forall { cc =>
@@ -200,7 +230,7 @@ object Manifest {
             }
           }
       }
-    } finally reader.close()
+    }
   }
 
   /** Latest committed manifest, or None for an empty/new table dir. */

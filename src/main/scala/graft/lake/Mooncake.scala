@@ -472,12 +472,10 @@ class Mooncake(val warehouse: String, val database: String = "main") {
           s"table '$name': reader requires version >= $v but flushVersion " +
             s"is ${m.flushVersion}")
     }
-    val leading = m.pkColumns.headOption.contains(column)
     val files = m.files.filter { f =>
-      val range = f.rangeOf(column).orElse(
-        if (leading) for (a <- f.minKey; b <- f.maxKey) yield (a, b)
-        else None)
-      range.forall { case (fLo, fHi) => fLo <= hi && fHi >= lo }
+      f.rangeOf(column, m.pkColumns).forall { case (fLo, fHi) =>
+        fLo <= hi && fHi >= lo
+      }
     }
     val base = readFiles(spark, m, files)
     base.filter(longView(base, column) >= lo && longView(base, column) <= hi)
@@ -507,12 +505,10 @@ class Mooncake(val warehouse: String, val database: String = "main") {
           s"table '$name': reader requires version >= $v but flushVersion " +
             s"is ${m.flushVersion}")
     }
-    val leading = m.pkColumns.headOption.contains(column)
     val ranged = m.files.filter { f =>
-      val range = f.rangeOf(column).orElse(
-        if (leading) for (a <- f.minKey; b <- f.maxKey) yield (a, b)
-        else None)
-      range.forall { case (lo, hi) => lo <= value && value <= hi }
+      f.rangeOf(column, m.pkColumns).forall { case (lo, hi) =>
+        lo <= value && value <= hi
+      }
     }
     val kept =
       if (!m.bloomColumns.exists(_.contains(column))) ranged
@@ -947,94 +943,9 @@ class Mooncake(val warehouse: String, val database: String = "main") {
   // -------------------------------------------------------------------------
 
   /** Write `df` as the data files of manifest `version` (plus carried-over
-    * files) and commit atomically. Per-file min/max of the leading pk comes
-    * from the parquet FOOTERS — metadata-only, no second data scan (the
+    * files) and commit atomically. Per-file bounds come from the parquet
+    * FOOTERS ([[FooterStats]]) — metadata-only, no second data scan (the
     * same way Iceberg collects file stats at commit time). */
-  /** Row count + min/max of EVERY integer-, date- and string-typed
-    * column for one parquet file, from the footer metadata alone (the
-    * footer already carries per-column stats, so multi-column skipping
-    * costs nothing extra at commit time). Lossy by design: a stats-less
-    * or unmapped column is simply absent from the maps, which file
-    * skipping treats as "may contain anything" — always safe.
-    *
-    *  - DATE (INT32/date annotation) stats are epoch days — the same
-    *    integer a resolved date literal evaluates to, so they share the
-    *    integer maps and the integer compare.
-    *  - STRING stats store truncated per [[Mooncake.truncLower]]/
-    *    [[Mooncake.truncUpper]] so a long text column costs bounded
-    *    manifest bytes. */
-  private def footerStats(p: Path)
-      : (Long, Map[String, Long], Map[String, Long],
-        Map[String, String], Map[String, String]) =
-    Manifest.withFooter(p) { footer =>
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      def asLong(v: Any): Option[Long] = v match {
-        case l: java.lang.Long => Some(l.longValue)
-        case i: java.lang.Integer => Some(i.longValue)
-        case _ => None
-      }
-      // Integer tier: only PLAIN ints and DATE. Decimals and timestamps
-      // are also INT32/INT64 at the physical layer but their footer
-      // stats are unscaled/micros — pruning with them against logical
-      // filter values would silently drop matching rows.
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      def intLike(c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
-          : Boolean = c.getPrimitiveType.getLogicalTypeAnnotation match {
-        case null => true
-        case _: LogicalTypeAnnotation.IntLogicalTypeAnnotation => true
-        case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation => true
-        case _ => false
-      }
-      def stringLike(c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
-          : Boolean = c.getPrimitiveType.getLogicalTypeAnnotation match {
-        case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation => true
-        case _ => false
-      }
-      val mins = Map.newBuilder[String, Long]
-      val maxs = Map.newBuilder[String, Long]
-      val sMins = Map.newBuilder[String, String]
-      val sMaxs = Map.newBuilder[String, String]
-      blocks.flatMap(_.getColumns.asScala)
-        .groupBy(_.getPath.toDotString)
-        .foreach { case (name, chunks) =>
-          val stats = chunks.map(_.getStatistics)
-          val statted = stats.forall(s => s != null && s.hasNonNullValue)
-          if (chunks.forall(intLike) && statted) {
-            val los = stats.map(s => asLong(s.genericGetMin))
-            val his = stats.map(s => asLong(s.genericGetMax))
-            if (!los.contains(None) && !his.contains(None)) {
-              mins += name -> los.flatten.min
-              maxs += name -> his.flatten.max
-            }
-          } else if (chunks.forall(stringLike) && statted) {
-            def str(v: Any): Option[String] = v match {
-              case b: org.apache.parquet.io.api.Binary =>
-                Some(b.toStringUsingUTF8)
-              case _ => None
-            }
-            val los = stats.map(s => str(s.genericGetMin))
-            val his = stats.map(s => str(s.genericGetMax))
-            if (!los.contains(None) && !his.contains(None)) {
-              import java.nio.charset.StandardCharsets.UTF_8
-              def byteMin(a: String, b: String) =
-                if (java.util.Arrays.compareUnsigned(
-                  a.getBytes(UTF_8), b.getBytes(UTF_8)) <= 0) a else b
-              def byteMax(a: String, b: String) =
-                if (java.util.Arrays.compareUnsigned(
-                  a.getBytes(UTF_8), b.getBytes(UTF_8)) >= 0) a else b
-              val lo = los.flatten.reduce(byteMin)
-              val hi = his.flatten.reduce(byteMax)
-              Mooncake.truncUpper(hi).foreach { u =>
-                sMins += name -> Mooncake.truncLower(lo)
-                sMaxs += name -> u
-              }
-            }
-          }
-        }
-      (rows, mins.result(), maxs.result(), sMins.result(), sMaxs.result())
-    }
-
   private def writeVersion(spark: SparkSession, name: String, df: DataFrame,
       pk: Seq[String], version: Long, carryOver: Seq[DataFile],
       alreadyPartitioned: Boolean = false,
@@ -1072,14 +983,8 @@ class Mooncake(val warehouse: String, val database: String = "main") {
       _.getFileName.toString.endsWith(".parquet")).toSeq).sortBy(_.toString)
     // footer stats on a pool — never 10⁴ sequential driver opens
     val newFiles = Manifest.parFiles(written) { p =>
-      val (rows, mins, maxs, sMins, sMaxs) = footerStats(p)
-      val lead = pk.headOption
-      DataFile(p.toString, rows, Files.size(p),
-        lead.flatMap(mins.get), lead.flatMap(maxs.get),
-        colMin = if (mins.isEmpty) None else Some(mins),
-        colMax = if (maxs.isEmpty) None else Some(maxs),
-        colMinStr = if (sMins.isEmpty) None else Some(sMins),
-        colMaxStr = if (sMaxs.isEmpty) None else Some(sMaxs))
+      DataFile.fromStats(p.toString, Files.size(p), pk.headOption,
+        FooterStats.read(p))
     }.filter(_.rows > 0)
 
     val manifest = Manifest(
@@ -1118,11 +1023,7 @@ object Mooncake {
     if (cs.isEmpty) m.files
     else m.files.filter { f =>
       cs.forall { case (n, op, v) =>
-        val leading = m.pkColumns.headOption.contains(n)
-        val range: Option[(Any, Any)] = f.rangeOf(n)
-          .orElse(
-            if (leading) for (a <- f.minKey; b <- f.maxKey) yield (a, b)
-            else None)
+        val range: Option[(Any, Any)] = f.rangeOf(n, m.pkColumns)
           .map(t => (Long.box(t._1): Any, Long.box(t._2): Any))
           .orElse(f.strRangeOf(n).map(t => (t._1: Any, t._2: Any)))
         range.forall { case (lo, hi) =>
