@@ -939,7 +939,6 @@ object DeltaCompat {
 
       // Stage part files via Spark (hive layout when partitioned), then
       // move them under the table root keeping their partition dirs.
-      // Footer stats on a pool: never 10⁴ sequential driver opens.
       val added = Manifest.parFiles(stageFiles(staged, root, stagePartCols)) {
         case (rel, size, pv) =>
           (rel, size, pv, statsJson(FooterStats.read(root.resolve(rel))))

@@ -2552,8 +2552,6 @@ object IcebergCompat {
         }
       new GenericData.Array[AnyRef](arrSchema, entries.asJava)
     }
-    // footer stats on a pool: a 10⁴-file commit must not serialize 10⁴
-    // footer opens on one driver thread (MetaScaleProbe finding)
     val fileStats = Manifest.parFiles(moved.map(_._1)) { p =>
       val path = Paths.get(p)
       (FooterStats.read(path), Files.size(path))

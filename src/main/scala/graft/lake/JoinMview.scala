@@ -163,10 +163,8 @@ class JoinMview(val lake: Mooncake) {
     // to collect it anyway — the applyChanges hazard class — so past the
     // same configurable limit the hint drops and Spark plans a shuffled
     // join, which is the plan you'd want once the delta is table-sized.
-    val bcastLimit = spark.conf.getOption(
-      "spark.graft.cdc.broadcastKeyLimit").map(_.toLong).getOrElse(4000000L)
     def maybeBroadcast(df: DataFrame, n: Long): DataFrame =
-      if (n <= bcastLimit) broadcast(df) else df
+      if (n <= Mooncake.broadcastKeyLimit(spark)) broadcast(df) else df
 
     // Every persisted frame is tracked so a throw mid-refresh (e.g. a
     // concurrent-writer manifest-version conflict inside applyChanges)

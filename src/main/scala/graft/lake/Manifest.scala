@@ -2,6 +2,7 @@ package graft.lake
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import scala.jdk.CollectionConverters._
 
@@ -194,21 +195,19 @@ object Manifest {
     withReader(p)(r => f(r.getFooter))
 
   /** Map `f` over `items` on a bounded pool — the commit-time pattern
-    * for per-file footer work (stats, record counts): a 10⁴-file commit
-    * must not serialize 10⁴ footer opens on one driver thread. Order
-    * preserved. Sized to the JVM's cores (these are short IO+parse
-    * tasks, not Spark jobs). */
+    * for per-file footer work (stats, record counts): neither a 10⁴-file
+    * commit nor a CDC rewrite's handful reads its footers one by one.
+    * Order kept, `f`'s own exception rethrown. One shared pool of daemon
+    * threads sized to the JVM's cores, made on first use; each inherits its
+    * creator's context class loader, which Hadoop's FileSystem lookup uses. */
   private[lake] def parFiles[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if (items.size < 8) items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(Runtime.getRuntime.availableProcessors(), 32))
-      try {
-        val futs = items.map(i => pool.submit(
-          new java.util.concurrent.Callable[B] { def call(): B = f(i) }))
-        futs.map(_.get())
-      } finally pool.shutdown()
-    }
+    if (items.size < 2) items.map(f)
+    else items.map(i => footerPool.submit(new Callable[B] { def call(): B = f(i) }))
+      .map(t => try t.get() catch { case e: ExecutionException => throw e.getCause })
+
+  private lazy val footerPool = Executors.newFixedThreadPool(
+    math.min(Runtime.getRuntime.availableProcessors(), 32), { (r: Runnable) =>
+      val t = new Thread(r, "graft-footer"); t.setDaemon(true); t })
 
   /** Probe a parquet file's bloom filter for an integer point value:
     * true iff some row group MIGHT contain it (missing blooms or a

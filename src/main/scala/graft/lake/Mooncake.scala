@@ -6,7 +6,10 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ArrayBinarySearch
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
 
 /** Thrown when a read demands a fresher snapshot than has been flushed —
   * the engine-side equivalent of the reference's LSN gate (a scan carries
@@ -541,9 +544,9 @@ class Mooncake(val warehouse: String, val database: String = "main") {
     * The build side is collected only up to `maxInSet` distinct keys —
     * the same bounded-collect contract as Spark's own runtime bloom
     * filter (a selective build side is broadcast-sized by definition);
-    * the common small case pays exactly ONE action. Above the cap, the
-    * key set is NOT pushed; a second [min, max] aggregation still
-    * prunes clustered fact layouts. */
+    * the common small case pays ONE action, a driver-local `keys` none.
+    * Above the cap, the key set is NOT pushed; a second [min, max]
+    * aggregation still prunes clustered fact layouts. */
   def readForKeys(spark: SparkSession, name: String, column: String,
       keys: DataFrame, atLeastVersion: Option[Long] = None,
       maxInSet: Int = 10000): DataFrame = {
@@ -651,14 +654,20 @@ class Mooncake(val warehouse: String, val database: String = "main") {
     *   - optional `__seq`: intra-batch order; the last op per key wins
     *     (so I→U→D of one key within a batch nets to absent).
     *
-    * Execution shape (the part that must survive 100 TB):
-    *   1. distinct affected keys — small, broadcast;
-    *   2. manifest file skipping on the leading pk min/max → only files
-    *      that can contain an affected key are rewritten;
-    *   3. survivors = touched-file rows anti-join affected keys (broadcast
+    * Execution shape (the part that must survive 100 TB), in as few Spark
+    * jobs as it can — per-job overhead dominates a small batch's apply:
+    *   1. the last op per key is pinned; ONE aggregate over it gives the
+    *      key count and, for an int, long or date leading pk, its range;
+    *   2. manifest file skipping on that range → only files that can
+    *      contain an affected key are rewritten;
+    *   3. survivors = touched-file rows anti-join the batch keys (broadcast
     *      anti-join, no table shuffle), unioned with the batch's final
     *      I/U images;
-    *   4. new files written, untouched files carried over, one atomic
+    *   4. the rewrite is range-clustered by cuts from the touched files'
+    *      manifest ranges and the batch's ([[Mooncake.rangeCuts]]) when the
+    *      layout is that integer leading pk; other layouts (another column,
+    *      several columns, string keys) by repartitionByRange's sampling;
+    *   5. new files written, untouched files carried over, one atomic
     *      manifest commit with commitVersion = flushVersion = `version`.
     */
   def applyChanges(spark: SparkSession, name: String, changes: DataFrame,
@@ -697,97 +706,100 @@ class Mooncake(val warehouse: String, val database: String = "main") {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(pk.map(col): _*).orderBy(seqCol.desc, tieCol.desc)
     // A CDC batch is small relative to the table; pin it once — it feeds
-    // three consumers (key bounds, the broadcast key set, the insert
-    // images) and recomputing the dedup window per consumer triples the
-    // batch-side work.
+    // the batch aggregate, the key side and the insert images, and
+    // recomputing the dedup window per consumer would repeat the
+    // batch-side work. Released however the apply ends.
     val lastOps = changes
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn", "__seq")
       .persist()
+    try {
+      // The window leaves one row per pk tuple, nulls included: the key
+      // side needs no distinct, and its row count is the key count.
+      val affectedKeys = lastOps.select(pk.map(col): _*)
+      val inserts = lastOps.filter(col("__op") =!= "D")
+        .select(dataCols.map(col).toIndexedSeq: _*)
 
-    val affectedKeys = lastOps.select(pk.map(col): _*).distinct()
-    val inserts = lastOps.filter(col("__op") =!= "D")
-      .select(dataCols.map(col).toIndexedSeq: _*)
-
-    // File skipping on the leading pk column. The key-bounds job is only
-    // worth running when skipping can actually prune: more than one data
-    // file, at least one of them carrying stats. An EMPTY batch (a
-    // stream tick with nothing surviving upstream filters) touches
-    // nothing — without this guard its null key bounds would
-    // conservatively match every file and rewrite the whole table to
-    // apply zero rows.
-    val batchEmpty = lastOps.isEmpty
-    val skippable = m.files.size > 1 && m.files.exists(_.minKey.isDefined)
-    val (touched, untouched) =
-      if (batchEmpty) (Seq.empty[DataFile], m.files)
-      else if (!skippable) (m.files, Seq.empty[DataFile])
-      else {
-        val keyBounds = affectedKeys
-          .agg(min(longView(affectedKeys, pk.head)),
-            max(longView(affectedKeys, pk.head)))
-          .head()
-        val (loKey, hiKey) =
-          (Option(keyBounds.get(0)).map(_.asInstanceOf[Long]),
-            Option(keyBounds.get(1)).map(_.asInstanceOf[Long]))
-        m.files.partition { f =>
-          (for { lo <- loKey; hi <- hiKey; fLo <- f.minKey; fHi <- f.maxKey }
+      // The one batch aggregate. An EMPTY batch (a stream tick with
+      // nothing surviving upstream filters) touches nothing — its null
+      // key range would otherwise conservatively match every file and
+      // rewrite the whole table to apply zero rows.
+      val lead = pk.headOption.filter(c =>
+        Seq(IntegerType, LongType, DateType).contains(lastOps.schema(c).dataType))
+      val stats = lastOps.agg(count(lit(1)), lead.toSeq.flatMap(c =>
+        Seq(min(longView(lastOps, c)), max(longView(lastOps, c)))): _*).head()
+      val nKeys = stats.getLong(0)
+      val keyRange = Option.when(lead.nonEmpty && !stats.isNullAt(1))(
+        (stats.getLong(1), stats.getLong(2)))
+      val skippable = m.files.size > 1 && m.files.exists(_.minKey.isDefined)
+      val (touched, untouched) =
+        if (nKeys == 0) (Seq.empty[DataFile], m.files)
+        else if (!skippable) (m.files, Seq.empty[DataFile])
+        else m.files.partition { f =>
+          (for { (lo, hi) <- keyRange; fLo <- f.minKey; fHi <- f.maxKey }
             yield fLo <= hi && fHi >= lo).getOrElse(true)
         }
-      }
 
-    // CDC batches are normally tiny next to the table, so the affected-key
-    // set broadcasts. But a bulk backfill replayed through this path can
-    // carry tens of millions of keys — broadcasting that OOMs the driver.
-    // Count is cheap (lastOps is pinned); past the limit fall back to a
-    // shuffled anti-join, which is the plan you'd want anyway once the
-    // batch is table-sized.
-    val broadcastKeyLimit = spark.conf.getOption(
-      "spark.graft.cdc.broadcastKeyLimit").map(_.toLong).getOrElse(4000000L)
-    val keySide =
-      if (touched.isEmpty || affectedKeys.count() <= broadcastKeyLimit)
-        broadcast(affectedKeys)
-      else affectedKeys
-    val survivors =
-      if (touched.isEmpty) None
-      else Some(readFiles(spark, m, touched)
-        .join(keySide, pk, "left_anti"))
-    // allowMissingColumns null-fills the added columns on the survivor
-    // side; the explicit select pins the widened column order (table
-    // schema, then additions in batch order).
-    val newRows = survivors
-      .map(_.unionByName(inserts, allowMissingColumns = addedCols.nonEmpty))
-      .getOrElse(inserts)
-      .select((tableSchema.fieldNames ++ addedCols).map(col).toIndexedSeq: _*)
+      // A bulk backfill replayed through this path can carry tens of
+      // millions of keys — broadcasting that OOMs the driver, so past the
+      // limit the anti-join shuffles, as it should at table size anyway.
+      val keySide =
+        if (nKeys <= Mooncake.broadcastKeyLimit(spark)) broadcast(affectedKeys)
+        else affectedKeys
+      val survivors =
+        if (touched.isEmpty) None
+        else Some(readFiles(spark, m, touched)
+          .join(keySide, pk, "left_anti"))
+      // allowMissingColumns null-fills the added columns on the survivor
+      // side; the explicit select pins the widened column order (table
+      // schema, then additions in batch order).
+      val newRows = survivors
+        .map(_.unionByName(inserts, allowMissingColumns = addedCols.nonEmpty))
+        .getOrElse(inserts)
+        .select((tableSchema.fieldNames ++ addedCols).map(col).toIndexedSeq: _*)
 
-    // Re-cluster the rewritten region: output file count is sized by the
-    // touched bytes (exact, from the manifest — no optimizer guessing)
-    // PLUS the insert side's optimizer estimate when one is known — a
-    // bulk insert-only batch (backfill replay, initial corpus append)
-    // touches zero files, and sizing from touched bytes alone would
-    // funnel the whole batch through ONE task into ONE oversized file.
-    // A normal small CDC batch keeps its exact touched-bytes sizing
-    // (its insert estimate rounds to zero extra files).
-    val rewriteBytes = touched.map(_.bytes).sum
-    val insertEst = inserts.queryExecution.optimizedPlan.stats.sizeInBytes
-    val insertBytes =
-      if (insertEst < BigInt(Long.MaxValue) / 10000) insertEst.toLong else 0L
-    val targetFB = spark.conf.getOption("spark.graft.targetFileBytes")
-      .map(_.toLong).getOrElse(targetFileBytes)
-    val nFiles =
-      (((rewriteBytes + insertBytes) / targetFB) min 10000L).toInt + 1
-    val ccols = m.clusterColumns.getOrElse(pk)
-    val clustered =
-      if (ccols.isEmpty) newRows
-      // single file: plain shuffle — range partitioning would add a
-      // sampling pass over the anti-join for bounds it doesn't need;
-      // the write-side in-partition sort already clusters the file
-      else if (nFiles == 1) newRows.repartition(1)
-      else newRows.repartitionByRange(nFiles, ccols.map(col): _*)
+      // Re-cluster the rewritten region: output file count is sized by the
+      // touched bytes (exact, from the manifest — no optimizer guessing)
+      // PLUS the insert side's optimizer estimate when one is known — a
+      // bulk insert-only batch (backfill replay, initial corpus append)
+      // touches zero files, and sizing from touched bytes alone would
+      // funnel the whole batch through ONE task into ONE oversized file.
+      // A normal small CDC batch keeps its exact touched-bytes sizing
+      // (its insert estimate rounds to zero extra files).
+      val rewriteBytes = touched.map(_.bytes).sum
+      val insertEst = inserts.queryExecution.optimizedPlan.stats.sizeInBytes
+      val insertBytes =
+        if (insertEst < BigInt(Long.MaxValue) / 10000) insertEst.toLong else 0L
+      val targetFB = spark.conf.getOption("spark.graft.targetFileBytes")
+        .map(_.toLong).getOrElse(targetFileBytes)
+      val nFiles =
+        (((rewriteBytes + insertBytes) / targetFB) min 10000L).toInt + 1
+      val ccols = m.clusterColumns.getOrElse(pk)
+      val clustered =
+        if (ccols.isEmpty) newRows
+        // single file: plain shuffle — range partitioning would add a
+        // sampling pass over the anti-join for bounds it doesn't need;
+        // the write-side in-partition sort already clusters the file
+        else if (nFiles == 1) newRows.repartition(1)
+        else (lead, keyRange) match {
+          case (Some(c), Some(batch))
+              if ccols == Seq(c) && touched.forall(_.rangeOf(c, pk).isDefined) =>
+            val spans =
+              touched.map(f => (f.rangeOf(c, pk).get, f.rows)) :+ (batch, nKeys)
+            // partition = count of cuts below the key, nulls first; a typed array
+            // literal is a reference object in generated code: batches share classes
+            val at = ColumnBridge.column(ArrayBinarySearch(ColumnBridge.expression(
+              typedLit(Mooncake.rangeCuts(spans, nFiles))),
+              ColumnBridge.expression(longView(newRows, c))))
+            newRows.repartitionById(nFiles,
+              coalesce(when(at < 0, -at - 1).otherwise(at), lit(0)))
+          case _ => newRows.repartitionByRange(nFiles, ccols.map(col): _*)
+        }
 
-    try writeVersion(spark, name, clustered, pk, version,
-      carryOver = untouched, bloomColumns = m.bloomColumns.getOrElse(Nil),
-      clusterColumns = m.clusterColumns, addWatermarks = watermarks)
-    finally lastOps.unpersist(blocking = false)
+      writeVersion(spark, name, clustered, pk, version,
+        carryOver = untouched, bloomColumns = m.bloomColumns.getOrElse(Nil),
+        clusterColumns = m.clusterColumns, addWatermarks = watermarks)
+    } finally lastOps.unpersist(blocking = false)
   }
 
   // -------------------------------------------------------------------------
@@ -981,7 +993,6 @@ class Mooncake(val warehouse: String, val database: String = "main") {
 
     val written = Manifest.withListing(out)(_.filter(
       _.getFileName.toString.endsWith(".parquet")).toSeq).sortBy(_.toString)
-    // footer stats on a pool — never 10⁴ sequential driver opens
     val newFiles = Manifest.parFiles(written) { p =>
       DataFile.fromStats(p.toString, Files.size(p), pk.headOption,
         FooterStats.read(p))
@@ -1008,6 +1019,37 @@ object Mooncake {
   /** Default warehouse under the working dir (overridable per instance). */
   def apply(warehouse: String = "target/mooncake-warehouse"): Mooncake =
     new Mooncake(warehouse)
+
+  /** `spark.graft.cdc.broadcastKeyLimit`: the key count up to which a CDC
+    * apply or a join view refresh broadcasts. */
+  private[lake] def broadcastKeyLimit(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.cdc.broadcastKeyLimit")
+      .map(_.toLong).getOrElse(4000000L)
+
+  /** Up to `n - 1` ascending cuts splitting `spans` — key ranges [lo, hi],
+    * each with its rows spread evenly — into `n` parts of near-equal rows.
+    * Keys sit in doubles, so `hi - lo + 1` cannot overflow at the ends of
+    * Long, and the final toLong saturates. */
+  private[lake] def rangeCuts(spans: Seq[((Long, Long), Long)],
+      n: Int): Array[Long] = {
+    // the row density steps up at each span's lo and down just past its hi
+    val steps = spans.filter(_._2 > 0).flatMap { case ((lo, hi), rows) =>
+      val d = rows / (hi.toDouble - lo.toDouble + 1)
+      Seq(lo.toDouble -> d, (hi.toDouble + 1) -> -d)
+    }.sortBy(_._1)
+    val total = spans.map(_._2).filter(_ > 0).sum.toDouble
+    val cuts = Array.newBuilder[Long]
+    var (done, density, j) = (0.0, 0.0, 1)
+    steps.zip(steps.drop(1)).foreach { case ((a, step), (b, _)) =>
+      density += step
+      while (j < n && density > 0 && done + density * (b - a) >= total * j / n) {
+        cuts += (a + (total * j / n - done) / density).toLong
+        j += 1
+      }
+      done += density * (b - a)
+    }
+    cuts.result().distinct
+  }
 
   /** Manifest file skipping on extracted range conjuncts — one
     * implementation behind [[Mooncake.read]]'s Column prune and the SQL

@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.{col, lit, max, min}
 
 /** Build-side key collection for runtime semi-join file pruning, shared
@@ -23,8 +24,9 @@ object RuntimeFilter {
     * return an empty scan without touching any file). `keys` may carry
     * the fact column's name or be any single-column frame.
     *
-    * ONE Spark action when the build side is small (≤ `maxInSet`
-    * distinct keys — the common case): the collected set IS the
+    * NO Spark job for a build side the optimizer folds to driver-local
+    * rows (`Seq(...).toDF`), and ONE action for any other small one (≤
+    * `maxInSet` distinct keys — the common case): the collected set IS the
     * predicate, complete by construction for THAT evaluation. Only an
     * over-cap build side pays a second [min, max] aggregation.
     *
@@ -46,14 +48,16 @@ object RuntimeFilter {
             s"(has: ${keys.columns.mkString(", ")})")
         keys.columns.head
       }
-    val sample = keys.select(col(kcol)).na.drop().distinct()
-      .limit(maxInSet + 1).collect().map(_.get(0))
+    val nonNull = keys.select(col(kcol)).na.drop()
+    val sample =
+      if (nonNull.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+        nonNull.collect().map(_.get(0)).distinct.take(maxInSet + 1)
+      else nonNull.distinct().limit(maxInSet + 1).collect().map(_.get(0))
     if (sample.isEmpty) None
     else if (sample.length <= maxInSet)
       Some(col(column).isin(sample.toIndexedSeq: _*))
     else {
-      val b = keys.select(col(kcol)).na.drop()
-        .agg(min(col(kcol)).as("lo"), max(col(kcol)).as("hi")).head()
+      val b = nonNull.agg(min(col(kcol)).as("lo"), max(col(kcol)).as("hi")).head()
       Some(col(column) >= lit(b.get(0)) && col(column) <= lit(b.get(1)))
     }
   }

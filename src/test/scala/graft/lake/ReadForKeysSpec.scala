@@ -21,6 +21,20 @@ class ReadForKeysSpec extends SparkSuite {
     lake
   }
 
+  test("a driver-local key frame builds its predicate without a Spark job") {
+    val (pred, jobs) = org.apache.spark.sql.graft.JobCount(spark) {
+      RuntimeFilter.keyPredicate(Seq(Some(7L), None, Some(3L), Some(7L)).toDF("k"), "k")
+    }
+    assert(jobs === 0)
+    val kept = Seq(1L, 3L, 7L, 9L).toDF("k").filter(pred.get).as[Long].collect()
+    assert(kept.sorted.toSeq === Seq(3L, 7L))
+    // over the cap: the [min, max] fallback, as for any other frame
+    val range = RuntimeFilter.keyPredicate(Seq(5L, 2L, 8L).toDF("k"), "k", maxInSet = 2)
+    assert(Seq(1L, 2L, 6L, 8L, 9L).toDF("k").filter(range.get).as[Long]
+      .collect().sorted.toSeq === Seq(2L, 6L, 8L))
+    assert(RuntimeFilter.keyPredicate(Seq(Option.empty[Long]).toDF("k"), "k").isEmpty)
+  }
+
   test("a compact key set opens only its file") {
     val lake = mkTable()
     val keys = Seq(50L, 70L).toDF("ck")
