@@ -6,10 +6,15 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.ArrayBinarySearch
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ArrayBinarySearch, BoundReference,
+  Descending, InSet, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{DateType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, DateType, DecimalType, IntegerType, LongType,
+  StringType, TimestampNTZType, TimestampType}
 
 /** Thrown when a read demands a fresher snapshot than has been flushed —
   * the engine-side equivalent of the reference's LSN gate (a scan carries
@@ -588,9 +593,9 @@ class Mooncake(val warehouse: String, val database: String = "main") {
     * as its delete+insert pair, exactly how the CDC stream carries it
     * (SURVEY.md §3.2). Files shared by both manifests are pruned from the
     * diff BEFORE any row is read — copy-on-write means their rows are
-    * byte-identical on both sides and would only cancel out in the
-    * exceptAll. At 100 TB a small CDC delta therefore diffs only the
-    * rewritten files, not the table. */
+    * byte-identical on both sides and would only cancel out. At 100 TB a
+    * small CDC delta therefore diffs only the rewritten files, not the
+    * table, in one shuffle ([[Mooncake.changesBetween]]). */
   def tableChanges(spark: SparkSession, name: String, fromVersion: Long,
       toVersion: Long): DataFrame = {
     ResourceCaps.enforce(spark)
@@ -603,25 +608,9 @@ class Mooncake(val warehouse: String, val database: String = "main") {
           "the change-type tag this diff appends")
     val shared = mFrom.files.map(_.path).toSet
       .intersect(mTo.files.map(_.path).toSet)
-    // Across a schema evolution the two versions disagree on columns;
-    // lift both sides to the union schema with typed nulls ("column did
-    // not exist" ≡ null, the same lift readFiles applies to old files)
-    // so the exceptAll diff stays well-typed.
-    val sFrom = org.apache.spark.sql.types.StructType.fromDDL(mFrom.schemaDdl)
-    val sTo = org.apache.spark.sql.types.StructType.fromDDL(mTo.schemaDdl)
-    val unionFields = sTo.fields ++
-      sFrom.fields.filterNot(f => sTo.fieldNames.contains(f.name))
-    def align(df: DataFrame,
-        have: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(unionFields.map(f =>
-        if (have.fieldNames.contains(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-    val before = align(readFiles(spark, mFrom,
-      mFrom.files.filterNot(f => shared(f.path))), sFrom)
-    val after = align(readFiles(spark, mTo,
-      mTo.files.filterNot(f => shared(f.path))), sTo)
-    after.exceptAll(before).withColumn("_change", lit("insert"))
-      .unionByName(before.exceptAll(after).withColumn("_change", lit("delete")))
+    Mooncake.changesBetween(
+      readFiles(spark, mFrom, mFrom.files.filterNot(f => shared(f.path))),
+      readFiles(spark, mTo, mTo.files.filterNot(f => shared(f.path))))
   }
 
   private def readFiles(spark: SparkSession, m: Manifest,
@@ -656,19 +645,29 @@ class Mooncake(val warehouse: String, val database: String = "main") {
     *
     * Execution shape (the part that must survive 100 TB), in as few Spark
     * jobs as it can — per-job overhead dominates a small batch's apply:
-    *   1. the last op per key is pinned; ONE aggregate over it gives the
-    *      key count and, for an int, long or date leading pk, its range;
+    *   1. the batch side — the last op per key, the key count and, for an
+    *      int, long or date leading pk, its range — is found on the DRIVER
+    *      when the batch folds to local rows (`Seq(...).toDF`,
+    *      `createDataFrame` of rows) and its pk columns are int, long,
+    *      date, timestamp, decimal or binary-collated string
+    *      ([[localSide]]: no job, nothing cached);
+    *      any other batch (a stream's micro-batch, a view's state ops) is
+    *      pinned and ONE aggregate over it gives the same (2 jobs, plus one
+    *      to broadcast the keys);
     *   2. manifest file skipping on that range → only files that can
     *      contain an affected key are rewritten;
-    *   3. survivors = touched-file rows anti-join the batch keys (broadcast
-    *      anti-join, no table shuffle), unioned with the batch's final
-    *      I/U images;
+    *   3. survivors = touched-file rows without the batch keys (a local
+    *      batch: an IN-set filter for one pk column, else an anti-join of
+    *      its key rows; in Spark: a broadcast anti-join, no table
+    *      shuffle), unioned with the batch's final I/U images;
     *   4. the rewrite is range-clustered by cuts from the touched files'
     *      manifest ranges and the batch's ([[Mooncake.rangeCuts]]) when the
     *      layout is that integer leading pk; other layouts (another column,
     *      several columns, string keys) by repartitionByRange's sampling;
     *   5. new files written, untouched files carried over, one atomic
     *      manifest commit with commitVersion = flushVersion = `version`.
+    * The rewrite is 2 jobs (its shuffle and the write), so a local batch
+    * applies in 2 jobs and one in Spark in about 7.
     */
   def applyChanges(spark: SparkSession, name: String, changes: DataFrame,
       version: Long, watermarks: Map[String, Long] = Map.empty): Manifest = {
@@ -695,42 +694,49 @@ class Mooncake(val warehouse: String, val database: String = "main") {
           "this operator's scope")
     val addedCols = dataCols.filterNot(tableSchema.fieldNames.contains)
 
-    // Last op per key wins within the batch. __seq ties (a watermark
-    // coarser than the feed's op rate) break on a deterministic content
-    // fingerprint so a replayed batch converges to the SAME final image
-    // — same rule as CdcBatch.lastImagePerKey.
-    val seqCol = if (changes.columns.contains("__seq")) col("__seq")
-      else monotonically_increasing_id()
-    val tieCol = xxhash64(to_json(struct(
-      (dataCols :+ "__op").map(col): _*)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pk.map(col): _*).orderBy(seqCol.desc, tieCol.desc)
-    // A CDC batch is small relative to the table; pin it once — it feeds
-    // the batch aggregate, the key side and the insert images, and
-    // recomputing the dedup window per consumer would repeat the
-    // batch-side work. Released however the apply ends.
-    val lastOps = changes
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", "__seq")
-      .persist()
+    // The batch side: the last op per key ([[Mooncake.lastOpOrder]]), the
+    // final I/U images, the key count, the integer leading pk's range and
+    // the exclusion of the batch keys from the touched files' rows.
+    val order = Mooncake.lastOpOrder(changes)
+    val keyed = changes.select((dataCols :+ "__op").toIndexedSeq.map(col) ++
+      order.zipWithIndex.map { case (c, i) => c.as(s"__o$i") }: _*)
+    val lead = pk.headOption.filter(c =>
+      Seq(IntegerType, LongType, DateType).contains(changes.schema(c).dataType))
+    val local = Some(keyed.queryExecution.optimizedPlan).collect {
+      case l: LocalRelation if pk.forall(c => Mooncake.driverKey(l.schema(c).dataType)) => l
+    }
+    // A batch in Spark is pinned once: it feeds the batch aggregate, the
+    // key side and the insert images, and recomputing the dedup window
+    // per consumer would repeat the batch-side work. Released however the
+    // apply ends.
+    val pinned = Option.when(local.isEmpty)(
+      Mooncake.lastOpPerKey(changes, pk).drop("__seq").persist())
     try {
-      // The window leaves one row per pk tuple, nulls included: the key
-      // side needs no distinct, and its row count is the key count.
-      val affectedKeys = lastOps.select(pk.map(col): _*)
-      val inserts = lastOps.filter(col("__op") =!= "D")
-        .select(dataCols.map(col).toIndexedSeq: _*)
+      val (inserts, nKeys, keyRange, exclude) = local match {
+        case Some(l) => localSide(spark, l, pk, dataCols.toSeq, lead)
+        case None =>
+          val lastOps = pinned.get
+          // The one batch aggregate; the window leaves one row per pk
+          // tuple, nulls included, so its row count is the key count.
+          val stats = lastOps.agg(count(lit(1)), lead.toSeq.flatMap(c =>
+            Seq(min(longView(lastOps, c)), max(longView(lastOps, c)))): _*).head()
+          val nKeys = stats.getLong(0)
+          // A bulk backfill replayed through this path can carry tens of
+          // millions of keys — broadcasting that OOMs the driver, so past the
+          // limit the anti-join shuffles, as it should at table size anyway.
+          val keys = lastOps.select(pk.map(col): _*)
+          val keySide =
+            if (nKeys <= Mooncake.broadcastKeyLimit(spark)) broadcast(keys) else keys
+          (lastOps.filter(col("__op") =!= "D").select(dataCols.map(col).toIndexedSeq: _*),
+            nKeys, Option.when(lead.nonEmpty && !stats.isNullAt(1))(
+              (stats.getLong(1), stats.getLong(2))),
+            (df: DataFrame) => df.join(keySide, pk, "left_anti"))
+      }
 
-      // The one batch aggregate. An EMPTY batch (a stream tick with
-      // nothing surviving upstream filters) touches nothing — its null
-      // key range would otherwise conservatively match every file and
-      // rewrite the whole table to apply zero rows.
-      val lead = pk.headOption.filter(c =>
-        Seq(IntegerType, LongType, DateType).contains(lastOps.schema(c).dataType))
-      val stats = lastOps.agg(count(lit(1)), lead.toSeq.flatMap(c =>
-        Seq(min(longView(lastOps, c)), max(longView(lastOps, c)))): _*).head()
-      val nKeys = stats.getLong(0)
-      val keyRange = Option.when(lead.nonEmpty && !stats.isNullAt(1))(
-        (stats.getLong(1), stats.getLong(2)))
+      // An EMPTY batch (a stream tick with nothing surviving upstream
+      // filters) touches nothing — its null key range would otherwise
+      // conservatively match every file and rewrite the whole table to
+      // apply zero rows.
       val skippable = m.files.size > 1 && m.files.exists(_.minKey.isDefined)
       val (touched, untouched) =
         if (nKeys == 0) (Seq.empty[DataFile], m.files)
@@ -740,16 +746,9 @@ class Mooncake(val warehouse: String, val database: String = "main") {
             yield fLo <= hi && fHi >= lo).getOrElse(true)
         }
 
-      // A bulk backfill replayed through this path can carry tens of
-      // millions of keys — broadcasting that OOMs the driver, so past the
-      // limit the anti-join shuffles, as it should at table size anyway.
-      val keySide =
-        if (nKeys <= Mooncake.broadcastKeyLimit(spark)) broadcast(affectedKeys)
-        else affectedKeys
       val survivors =
         if (touched.isEmpty) None
-        else Some(readFiles(spark, m, touched)
-          .join(keySide, pk, "left_anti"))
+        else Some(exclude(readFiles(spark, m, touched)))
       // allowMissingColumns null-fills the added columns on the survivor
       // side; the explicit select pins the widened column order (table
       // schema, then additions in batch order).
@@ -799,7 +798,50 @@ class Mooncake(val warehouse: String, val database: String = "main") {
       writeVersion(spark, name, clustered, pk, version,
         carryOver = untouched, bloomColumns = m.bloomColumns.getOrElse(Nil),
         clusterColumns = m.clusterColumns, addWatermarks = watermarks)
-    } finally lastOps.unpersist(blocking = false)
+    } finally pinned.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The batch side of [[applyChanges]] for a batch that folds to rows on
+    * the driver, with no Spark job: the same last op per key as the window
+    * (Catalyst's ordering on the folded order columns, one group per pk
+    * tuple, nulls included), the final I/U images as a local relation, the
+    * key count, the range of `lead` under [[longView]]'s rule, and the key
+    * exclusion: `pk IS NULL OR pk NOT IN set` for a single-column pk of up
+    * to [[RuntimeFilter.MaxInSet]] keys (an integer or date pk compares
+    * as long, so the set is a reference object in generated code, not a
+    * per-batch switch), else an anti-join of a local key frame. */
+  private def localSide(spark: SparkSession, l: LocalRelation, pk: Seq[String],
+      dataCols: Seq[String], lead: Option[String])
+      : (DataFrame, Long, Option[(Long, Long)], DataFrame => DataFrame) = {
+    val out = l.output
+    def at(c: String): Int = out.indexWhere(_.name == c)
+    val order = new InterpretedOrdering((dataCols.size + 1 until out.size).map(i =>
+      SortOrder(BoundReference(i, out(i).dataType, out(i).nullable), Descending)))
+    val last = scala.collection.mutable.HashMap.empty[Seq[Any], InternalRow]
+    for (r <- l.data; k = pk.map(c => r.get(at(c), out(at(c)).dataType)))
+      if (last.get(k).forall(order.compare(r, _) < 0)) last(k) = r
+    val rows = last.values.toSeq
+    def frame(rs: Seq[InternalRow], cols: Seq[String]): DataFrame =
+      ColumnBridge.frame(spark, l.copy(data = rs).newInstance()).select(cols.map(col): _*)
+    val op = at("__op")
+    val inserts = frame(rows.filter(r =>
+      !r.isNullAt(op) && r.getUTF8String(op).toString != "D"), dataCols)
+    val longs = lead.map { c =>
+      val i = at(c)
+      rows.filterNot(_.isNullAt(i)).map(r =>
+        if (out(i).dataType == LongType) r.getLong(i) else r.getInt(i).toLong)
+    }
+    val exclude: DataFrame => DataFrame = pk match {
+      case Seq(c) if rows.size <= RuntimeFilter.MaxInSet =>
+        val set: Set[Any] = longs.getOrElse(
+          rows.map(_.get(at(c), out(at(c)).dataType)).filter(_ != null)).toSet
+        df => if (set.isEmpty) df else df.filter(col(c).isNull || !ColumnBridge.column(
+          InSet(ColumnBridge.expression(if (lead.isDefined) longView(df, c) else col(c)), set)))
+      case _ =>
+        val keys = frame(rows, pk)
+        df => df.join(keys, pk, "left_anti")
+    }
+    (inserts, rows.size.toLong, longs.filter(_.nonEmpty).map(ks => (ks.min, ks.max)), exclude)
   }
 
   // -------------------------------------------------------------------------
@@ -1025,6 +1067,61 @@ object Mooncake {
   private[lake] def broadcastKeyLimit(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.cdc.broadcastKeyLimit")
       .map(_.toLong).getOrElse(4000000L)
+
+  /** The multiset difference of two frames as change rows: each row of
+    * `after` beyond its count in `before` tagged 'insert', each row of
+    * `before` beyond its count in `after` tagged 'delete' — the same rows
+    * as two `exceptAll`s, in ONE signed aggregate (+1 per `after` row, -1
+    * per `before` row, grouped by every column, a nonzero sum replicated
+    * |sum| times). Across a schema evolution the two sides disagree on
+    * columns; both lift to the union schema with typed nulls ("column did
+    * not exist" ≡ null, the same lift readFiles applies to old files). */
+  private[lake] def changesBetween(before: DataFrame, after: DataFrame): DataFrame = {
+    val fields = after.schema.fields ++
+      before.schema.fields.filterNot(f => after.columns.contains(f.name))
+    def signed(df: DataFrame, w: Long): DataFrame =
+      df.select(fields.map(f =>
+        if (df.columns.contains(f.name)) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq :+ lit(w).as("_change"): _*)
+    signed(after, 1L).unionByName(signed(before, -1L))
+      .groupBy(fields.map(f => col(f.name)).toIndexedSeq: _*)
+      .agg(sum("_change").as("_change"))
+      .filter(col("_change") =!= 0)
+      .withColumn("_change", explode(array_repeat(
+        when(col("_change") > 0, "insert").otherwise("delete"),
+        abs(col("_change")).cast("int"))))
+  }
+
+  /** The last-op-per-key rule of a CDC batch, as the descending sort
+    * columns whose first row per key wins: `__seq` (nulls last) when the
+    * feed stamps one, else arrival order (monotonically_increasing_id:
+    * the later row of a local batch). `__seq` ties (a watermark coarser
+    * than the feed's op rate) break on a content fingerprint over the data
+    * columns in batch order, then `__op` — arbitrary but deterministic, so
+    * a replayed batch converges to the SAME final image; to_json covers
+    * map columns xxhash64-on-struct cannot. The mirror apply (in Spark or
+    * on the driver) and the Delta/Iceberg sinks all use this one rule. */
+  private[graft] def lastOpOrder(batch: DataFrame): Seq[Column] =
+    if (!batch.columns.contains("__seq")) Seq(monotonically_increasing_id())
+    else Seq(col("__seq"), xxhash64(to_json(struct((batch.columns.filterNot(c =>
+      c == "__op" || c == "__seq") :+ "__op").toIndexedSeq.map(col): _*))))
+
+  /** The last op per key of `batch` under [[lastOpOrder]], in Spark (a
+    * window); the batch's columns, `__seq` included, are kept. */
+  private[graft] def lastOpPerKey(batch: DataFrame, pk: Seq[String]): DataFrame =
+    batch.withColumn("__rn", row_number().over(Window.partitionBy(pk.map(col): _*)
+      .orderBy(lastOpOrder(batch).map(_.desc): _*)))
+      .filter(col("__rn") === 1).drop("__rn")
+
+  /** Key types whose driver-side grouping (value equality of the internal
+    * row values) is Spark's: not float or double (NaN, -0.0 normalise),
+    * not a collated string. */
+  private def driverKey(dt: DataType): Boolean = dt match {
+    case IntegerType | LongType | DateType | TimestampType | TimestampNTZType => true
+    case _: DecimalType => true
+    case s: StringType => s.collationId == 0 // UTF8_BINARY
+    case _ => false
+  }
 
   /** Up to `n - 1` ascending cuts splitting `spans` — key ranges [lo, hi],
     * each with its rows spread evenly — into `n` parts of near-equal rows.

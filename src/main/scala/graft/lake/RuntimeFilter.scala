@@ -19,6 +19,9 @@ import org.apache.spark.sql.functions.{col, lit, max, min}
   */
 object RuntimeFilter {
 
+  /** The largest key set pushed (or excluded) as an exact IN set. */
+  val MaxInSet = 10000
+
   /** Superset predicate over fact column `column` derived from the build
     * side, or None when the build side is empty (the caller should
     * return an empty scan without touching any file). `keys` may carry
@@ -39,7 +42,7 @@ object RuntimeFilter {
     * Pass only deterministic build sides; persist() a nondeterministic
     * one first if you must. */
   def keyPredicate(keys: DataFrame, column: String,
-      maxInSet: Int = 10000): Option[Column] = {
+      maxInSet: Int = MaxInSet): Option[Column] = {
     val kcol =
       if (keys.columns.contains(column)) column
       else {

@@ -133,7 +133,7 @@ object CdcStream {
   /** Is this CDC batch's net effect already exactly reflected in the
     * table's current image? Used as the [[applyVersioned]] content
     * probe on the legacy-checkpoint ambiguity path. The batch nets to
-    * its last op per key (the same [[CdcBatch.lastImagePerKey]] rule
+    * its last op per key (the same [[Mooncake.lastOpPerKey]] rule
     * applyChanges uses), then:
     *   - every final I/U image must be PRESENT verbatim, and
     *   - no OTHER row may exist under an affected key (covers net
@@ -155,7 +155,7 @@ object CdcStream {
     val dataCols = batch.columns.filterNot(c => c == "__op" || c == "__seq")
     if (dataCols.toSet != tableCols.toSet) return false
     import org.apache.spark.sql.functions.col
-    val last = CdcBatch.lastImagePerKey(batch, pk)
+    val last = Mooncake.lastOpPerKey(batch, pk)
     val keys = last.select(pk.map(col): _*).distinct()
     val current = lake.read(s, table)
       .join(keys, pk, "left_semi")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.lake.DeltaCompat
+import graft.lake.{DeltaCompat, Mooncake}
 
 /** Continuous upsert maintenance for a DELTA table: attach a streaming
   * change feed (rows of table-columns + `__op` in {I, U, D}) and apply
@@ -44,7 +44,7 @@ object DeltaCdcStream {
         // writing both an I and its later U verbatim would start the
         // table with two live rows, and an I whose final op is D must
         // not be written at all.
-        val finalImage = CdcBatch.lastImagePerKey(batch, keys).drop("__seq")
+        val finalImage = Mooncake.lastOpPerKey(batch, keys).drop("__seq")
         val exists = DeltaCompat.versions(tableDir).nonEmpty ||
           java.nio.file.Files.exists(java.nio.file.Paths
             .get(tableDir, "_delta_log", "_last_checkpoint"))

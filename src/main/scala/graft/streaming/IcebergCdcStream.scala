@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.lake.IcebergCompat
+import graft.lake.{IcebergCompat, Mooncake}
 
 /** Continuous upsert maintenance for an ICEBERG v2 table — the shape
   * streaming CDC writers (Flink, moonlink-style ingestion) emit: per
@@ -53,7 +53,7 @@ object IcebergCdcStream {
           // a D+I (CDC re-insert) or an upsert-spelled-as-I must kill
           // the table's older copy; an equality delete for a key that
           // never existed is a no-op, so over-tombstoning is safe.
-          val finalImage = CdcBatch.lastImagePerKey(batch, keys).drop("__seq")
+          val finalImage = Mooncake.lastOpPerKey(batch, keys).drop("__seq")
           val delKeys = finalImage.select(keys.map(col): _*)
           if (exists && delKeys.take(1).nonEmpty)
             IcebergCompat.writeEqualityDeletes(

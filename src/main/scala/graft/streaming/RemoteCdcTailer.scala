@@ -64,7 +64,7 @@ class RemoteCdcTailer(remote: SparkSession => DataFrame,
         // (the same reason both followers stamp __seq). A watermark
         // COARSER than the op rate (two ops on one key sharing a value)
         // leaves the pair's order unknowable at the tail; downstream
-        // (applyChanges / CdcBatch.lastImagePerKey) breaks such ties on
+        // (Mooncake.lastOpOrder) breaks such ties on
         // a content fingerprint, so every replay at least converges to
         // the SAME final image.
         val stamped0 =

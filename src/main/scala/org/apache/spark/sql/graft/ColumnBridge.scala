@@ -11,6 +11,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  def frame(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame = org.apache.spark.sql.classic.Dataset.ofRows(
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** The same frame bound to a CLONED session whose SQLConf holds the
     * given overrides — a library write path can require a conf value

@@ -48,16 +48,31 @@ class CdcApplySpec extends SparkSuite {
     assert(lake.read(spark, "e").count() === 8000)
   }
 
-  test("a 10-row apply into an 8-file long-pk mirror runs at most 7 jobs") {
-    val lake = new Mooncake(tmpDir("cdc-jobs"))
-    eightFiles(lake, "j")
-    val batch = (0 until 10).map(i => (1500L + i, s"u$i", if (i % 3 == 0) "D" else "U"))
+  /** 10 changes (6 updates, 4 deletes) to one file of an 8-file mirror:
+    * the jobs of the apply, and the mirror's rows after it. */
+  private def tenRowApply(name: String, inSpark: Boolean): Int = {
+    val lake = new Mooncake(tmpDir(s"cdc-jobs-$name"))
+    eightFiles(lake, name)
+    val rows = (0 until 10).map(i => (1500L + i, s"u$i", if (i % 3 == 0) "D" else "U"))
       .toDF("a", "b", "__op")
-    val (_, jobs) = JobCount(spark)(lake.applyChanges(spark, "j", batch, version = 2))
-    assert(jobs <= 7, s"apply ran $jobs jobs")
-    val got = lake.read(spark, "j")
+    // coalesce: rows in Spark without a shuffle of their own
+    val batch = if (inSpark) rows.coalesce(1) else rows
+    val (_, jobs) = JobCount(spark)(lake.applyChanges(spark, name, batch, version = 2))
+    val got = lake.read(spark, name)
     assert(got.count() === 8000 - 4)
     assert(got.filter(col("b").startsWith("u")).count() === 6)
+    jobs
+  }
+
+  test("a 10-row apply into an 8-file long-pk mirror runs at most 7 jobs") {
+    val jobs = tenRowApply("j", inSpark = true)
+    // more than the local path's 2: the coalesced frame is not driver-local
+    assert(jobs > 2 && jobs <= 7, s"apply ran $jobs jobs")
+  }
+
+  test("the same 10 rows as a local batch apply in at most 2 jobs") {
+    val jobs = tenRowApply("jl", inSpark = false)
+    assert(jobs <= 2, s"apply ran $jobs jobs")
   }
 
   test("a rewrite over several files writes disjoint key ranges") {

@@ -1,6 +1,9 @@
 package graft.lake
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 import graft.SparkSuite
 
@@ -181,4 +184,87 @@ class CdcPropertySpec extends SparkSuite {
       SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
     assert(result.passed, result.status.toString)
   }
+
+  import CdcPropertySpec.Change
+
+  private val genChange: Gen[Change] = for {
+    k1 <- Gen.frequency(9 -> Gen.choose(0, 3).map(Some(_)), 1 -> Gen.const(None))
+    k2 <- Gen.frequency(9 -> Gen.oneOf("a", "b").map(Some(_)), 1 -> Gen.const(None))
+    v <- Gen.alphaStr.map(_.take(3))
+    op <- Gen.oneOf("I", "U", "D")
+    seq <- Gen.frequency(4 -> Gen.choose(0L, 1L).map(Some(_)), 1 -> Gen.const(None))
+  } yield Change(k1, k2, v, op, seq)
+
+  /** The pk columns and the key columns' expressions of one pk shape. */
+  private val shapes: Map[String, (Seq[String], Seq[Column])] = Map(
+    "int" -> (Seq("k"), Seq(col("k1").as("k"))),
+    "string" -> (Seq("k"), Seq(concat(lit("s"), col("k1")).as("k"))),
+    "date" -> (Seq("k"), Seq(date_add(lit("2024-02-28").cast("date"), col("k1")).as("k"))),
+    "int+string" -> (Seq("k1", "k2"), Seq(col("k1"), col("k2"))))
+
+  test("a local batch and the same rows in Spark apply to identical versions") {
+    // one table per pk shape on each side, shared by the cases, so each
+    // table takes a batch with __seq and one without; case i takes shape
+    // i % 4, with __seq in cases 0-3 of every 8
+    val shapeOf = shapes.keys.toSeq.sorted
+    val lakes = Seq("local", "spark").map(side => new Mooncake(tmpDir(s"cdc-paths-$side")))
+    for ((shape, t) <- shapeOf.zipWithIndex; lake <- lakes)
+      lake.createTable(spark, s"t$t", (0 to 3).map(k => (k, "a", "init")).toDF("k1", "k2", "v")
+        .select(shapes(shape)._2 :+ col("v"): _*), shapes(shape)._1)
+    var i = 0
+    val prop = Prop.forAll(Gen.chooseNum(1, 10).flatMap(n => Gen.listOfN(n, genChange))) { cs =>
+      val (t, withSeq) = (i % 4, i % 8 < 4)
+      i += 1
+      val (pk, keyCols) = shapes(shapeOf(t))
+      val v = lakes(0).currentManifest(s"t$t").version + 1
+      val local = cs.toDF().select(keyCols ++ Seq(col("v"), col("op").as("__op"),
+        col("seq").as("__seq")): _*)
+      val batch = if (withSeq) local else local.drop("__seq")
+      // arrival order decides without __seq: one partition keeps it
+      val inSpark = if (withSeq) batch.repartition(3) else batch.coalesce(1)
+      lakes(0).applyChanges(spark, s"t$t", batch, v)
+      lakes(1).applyChanges(spark, s"t$t", inSpark, v)
+      val rows = lakes.map(_.readVersion(spark, s"t$t", v).select(to_json(struct("*"))))
+        .zipWithIndex.map { case (df, side) => df.withColumn("side", lit(side)) }
+        .reduce(_ union _).as[(String, Int)].collect()
+      val Seq(a, b) = (0 to 1).map(side => rows.filter(_._2 == side).map(_._1).sorted.toSeq)
+      (a == b) :| s"${shapeOf(t)}, __seq $withSeq: local $a, in Spark $b"
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  test("changesBetween equals the two exceptAlls on random frames") {
+    // duplicate rows, nulls, NaN and both zeros; `after` gains a column
+    // that `before` lacks, which the diff lifts to typed nulls
+    val genRow = for {
+      a <- Gen.frequency(4 -> Gen.choose(0, 2).map(Some(_)), 1 -> Gen.const(None))
+      d <- Gen.oneOf(Some(0.0), Some(-0.0), Some(Double.NaN), Some(1.5), None)
+      c <- Gen.oneOf(Some("x"), None)
+    } yield (a, d, c)
+    val prop = Prop.forAll(Gen.listOf(genRow), Gen.listOf(genRow)) { (bs, as) =>
+      val before = bs.map(r => (r._1, r._2)).toDF("a", "d")
+      val after = as.toDF("a", "d", "c")
+      val lifted = before.withColumn("c", lit(null).cast("string"))
+      val want = after.exceptAll(lifted).withColumn("_change", lit("insert"))
+        .unionByName(lifted.exceptAll(after).withColumn("_change", lit("delete")))
+      val got = Mooncake.changesBetween(before, after)
+      got.columns.toSeq == want.columns.toSeq &&
+        got.collect().map(_.toString).sorted.sameElements(
+          want.collect().map(_.toString).sorted)
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(result.passed, result.status.toString)
+  }
+}
+
+object CdcPropertySpec {
+  /** A change of the local-vs-Spark property: key parts (nullable, from a
+    * domain of 4 so batches repeat keys and re-insert deleted ones), a
+    * value, the op, and a `__seq` drawn from 0..1 or null so ties and
+    * null orders occur. */
+  case class Change(k1: Option[Int], k2: Option[String], v: String, op: String,
+      seq: Option[Long])
 }

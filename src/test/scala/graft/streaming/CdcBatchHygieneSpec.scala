@@ -81,9 +81,9 @@ class CdcBatchHygieneSpec extends SparkSuite {
     val batchB = Seq((2, "only", "I", 100L), (1, "beta", "U", 100L),
       (1, "alpha", "U", 100L))
       .toDF("id", "v", "__op", "__seq").repartition(3)
-    val a = CdcBatch.lastImagePerKey(batchA, Seq("id"))
+    val a = Mooncake.lastOpPerKey(batchA, Seq("id"))
       .select("id", "v").as[(Int, String)].collect().toSet
-    val b = CdcBatch.lastImagePerKey(batchB, Seq("id"))
+    val b = Mooncake.lastOpPerKey(batchB, Seq("id"))
       .select("id", "v").as[(Int, String)].collect().toSet
     assert(a === b, s"replayed tie resolved differently: $a vs $b")
     assert(a.size === 2 && a.contains(2 -> "only"))
@@ -100,6 +100,25 @@ class CdcBatchHygieneSpec extends SparkSuite {
     val r1 = applyOnce()
     val r2 = applyOnce()
     assert(r1 === r2, s"applyChanges tie nondeterministic: $r1 vs $r2")
+  }
+
+  test("sinks and mirror keep one final image when __op leads the columns") {
+    // Two ops on one key share __seq and __op is the FIRST column: the
+    // tie fingerprint must cover the columns in the same order for the
+    // sinks' final image and the mirror's (in Spark and on the driver),
+    // or the content probe misreads an applied batch.
+    val batch = Seq(("U", 1, "x0", 7L), ("U", 1, "y0", 7L))
+      .toDF("__op", "id", "v", "__seq")
+    val sink = Mooncake.lastOpPerKey(batch, Seq("id"))
+      .select("id", "v").as[(Int, String)].collect().toSet
+    for (frame <- Seq(batch, batch.repartition(2))) {
+      val lake = new Mooncake(tmpDir("tie-order"))
+      lake.createTable(spark, "t", Seq((0, "seed")).toDF("id", "v"), Seq("id"))
+      lake.applyChanges(spark, "t", frame, 2L)
+      val mirror = lake.read(spark, "t").as[(Int, String)].collect().toSet
+      assert(mirror === sink + (0 -> "seed"), s"sink $sink, mirror $mirror")
+      assert(CdcStream.contentNoop(lake, "t", batch))
+    }
   }
 
   test("mirror stream survives an out-of-band commit between batches") {
