@@ -2,7 +2,7 @@
 """Paired benchmark runs of a parent revision against the working tree.
 
     python3 scripts/bench_pair.py --parent <rev> --workload <olap|cdc> \
-        [--seeds 1-10 | --seeds 1,2,5] [--seconds N] [--held-out]
+        [--seeds 1-10 | --seeds 1,2,5] [--held-out]
 
 Run from the repository root. The parent revision is exported with
 `git archive` into a temporary directory (offline; nothing in `.git`
@@ -76,7 +76,6 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=seed_list, default=seed_list("1-10"),
                     help="e.g. 1-10 or 1,3,5 (default 1-10)")
-    ap.add_argument("--seconds", type=int, help="window (default: BENCHMARK.json)")
     ap.add_argument("--held-out", action="store_true", help=f"allow seed {HELD_OUT}")
     ap.add_argument("--workdir", help="where the parent is exported (default: a temp dir)")
     args = ap.parse_args()
@@ -84,7 +83,7 @@ def main():
         ap.error(f"seed {HELD_OUT} is held out; pass --held-out to use it")
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    seconds = args.seconds or spec["run_seconds"]
+    seconds = spec["run_seconds"]
 
     parent_root = tempfile.mkdtemp(prefix="bench-pair-", dir=args.workdir)
     results = {"parent": [], "change": []}

@@ -657,9 +657,10 @@ class Mooncake(val warehouse: String, val database: String = "main") {
     *   2. manifest file skipping on that range → only files that can
     *      contain an affected key are rewritten;
     *   3. survivors = touched-file rows without the batch keys (a local
-    *      batch: an IN-set filter for one pk column, else an anti-join of
-    *      its key rows; in Spark: a broadcast anti-join, no table
-    *      shuffle), unioned with the batch's final I/U images;
+    *      batch: an IN-set filter for one pk column, else a broadcast
+    *      anti-join of its key rows; in Spark: a broadcast anti-join; no
+    *      table shuffle either way), unioned with the batch's final I/U
+    *      images;
     *   4. the rewrite is range-clustered by cuts from the touched files'
     *      manifest ranges and the batch's ([[Mooncake.rangeCuts]]) when the
     *      layout is that integer leading pk; other layouts (another column,
@@ -667,7 +668,8 @@ class Mooncake(val warehouse: String, val database: String = "main") {
     *   5. new files written, untouched files carried over, one atomic
     *      manifest commit with commitVersion = flushVersion = `version`.
     * The rewrite is 2 jobs (its shuffle and the write), so a local batch
-    * applies in 2 jobs and one in Spark in about 7.
+    * applies in 2 jobs (3 when its keys are broadcast) and one in Spark in
+    * about 7.
     */
   def applyChanges(spark: SparkSession, name: String, changes: DataFrame,
       version: Long, watermarks: Map[String, Long] = Map.empty): Manifest = {
@@ -809,7 +811,8 @@ class Mooncake(val warehouse: String, val database: String = "main") {
     * exclusion: `pk IS NULL OR pk NOT IN set` for a single-column pk of up
     * to [[RuntimeFilter.MaxInSet]] keys (an integer or date pk compares
     * as long, so the set is a reference object in generated code, not a
-    * per-batch switch), else an anti-join of a local key frame. */
+    * per-batch switch), else an anti-join of a local key frame, broadcast
+    * up to [[Mooncake.broadcastKeyLimit]] keys as on the Spark path. */
   private def localSide(spark: SparkSession, l: LocalRelation, pk: Seq[String],
       dataCols: Seq[String], lead: Option[String])
       : (DataFrame, Long, Option[(Long, Long)], DataFrame => DataFrame) = {
@@ -839,7 +842,8 @@ class Mooncake(val warehouse: String, val database: String = "main") {
           InSet(ColumnBridge.expression(if (lead.isDefined) longView(df, c) else col(c)), set)))
       case _ =>
         val keys = frame(rows, pk)
-        df => df.join(keys, pk, "left_anti")
+        val side = if (rows.size <= Mooncake.broadcastKeyLimit(spark)) broadcast(keys) else keys
+        df => df.join(side, pk, "left_anti")
     }
     (inserts, rows.size.toLong, longs.filter(_.nonEmpty).map(ks => (ks.min, ks.max)), exclude)
   }

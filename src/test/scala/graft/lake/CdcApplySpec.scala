@@ -75,6 +75,24 @@ class CdcApplySpec extends SparkSuite {
     assert(jobs <= 2, s"apply ran $jobs jobs")
   }
 
+  test("a local batch on a two-column pk broadcasts its keys with auto-broadcast off") {
+    val lake = new Mooncake(tmpDir("cdc-jobs-pk2"))
+    lake.createTable(spark, "p", spark.range(0, 8000).select(col("id").as("a"),
+      (col("id") % 2).as("c"), concat(lit("v"), col("id")).as("b")),
+      Seq("a", "c"), targetFileCount = Some(8))
+    val batch = (0 until 10).map(i => (1500L + i, (1500L + i) % 2, s"u$i",
+      if (i % 3 == 0) "D" else "U")).toDF("a", "c", "b", "__op")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (_, jobs) = try JobCount(spark)(lake.applyChanges(spark, "p", batch, version = 2))
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    // the key broadcast and the rewrite's 2; a sort-merge anti-join would
+    // add a shuffle of the touched files and one of the keys
+    assert(jobs <= 3, s"apply ran $jobs jobs")
+    val got = lake.read(spark, "p")
+    assert(got.count() === 8000 - 4)
+    assert(got.filter(col("b").startsWith("u")).count() === 6)
+  }
+
   test("a rewrite over several files writes disjoint key ranges") {
     val lake = new Mooncake(tmpDir("cdc-layout"))
     val before = eightFiles(lake, "l")

@@ -200,12 +200,14 @@ class CdcPropertySpec extends SparkSuite {
     "int" -> (Seq("k"), Seq(col("k1").as("k"))),
     "string" -> (Seq("k"), Seq(concat(lit("s"), col("k1")).as("k"))),
     "date" -> (Seq("k"), Seq(date_add(lit("2024-02-28").cast("date"), col("k1")).as("k"))),
+    "decimal" -> (Seq("k"), Seq((col("k1").cast("decimal(10,2)") / 4).cast("decimal(10,2)").as("k"))),
+    "timestamp" -> (Seq("k"), Seq(timestamp_seconds(col("k1") * 3600 + 1700000000L).as("k"))),
     "int+string" -> (Seq("k1", "k2"), Seq(col("k1"), col("k2"))))
 
   test("a local batch and the same rows in Spark apply to identical versions") {
     // one table per pk shape on each side, shared by the cases, so each
     // table takes a batch with __seq and one without; case i takes shape
-    // i % 4, with __seq in cases 0-3 of every 8
+    // i % 6, with __seq in cases 0-5 of every 12
     val shapeOf = shapes.keys.toSeq.sorted
     val lakes = Seq("local", "spark").map(side => new Mooncake(tmpDir(s"cdc-paths-$side")))
     for ((shape, t) <- shapeOf.zipWithIndex; lake <- lakes)
@@ -213,7 +215,7 @@ class CdcPropertySpec extends SparkSuite {
         .select(shapes(shape)._2 :+ col("v"): _*), shapes(shape)._1)
     var i = 0
     val prop = Prop.forAll(Gen.chooseNum(1, 10).flatMap(n => Gen.listOfN(n, genChange))) { cs =>
-      val (t, withSeq) = (i % 4, i % 8 < 4)
+      val (t, withSeq) = (i % shapeOf.size, i % (2 * shapeOf.size) < shapeOf.size)
       i += 1
       val (pk, keyCols) = shapes(shapeOf(t))
       val v = lakes(0).currentManifest(s"t$t").version + 1
@@ -231,7 +233,7 @@ class CdcPropertySpec extends SparkSuite {
       (a == b) :| s"${shapeOf(t)}, __seq $withSeq: local $a, in Spark $b"
     }
     val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+      SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(result.passed, result.status.toString)
   }
 
